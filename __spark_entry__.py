@@ -648,11 +648,12 @@ def q27_json_props(spark, sf_dir):
 
 
 def q29_bloom_search_linear(spark, sf_dir):
-    """The SAME containment search as q13 answered by the OTHER physical
-    strategy: the distributed Linear (I1) scan — an all-JVM codegen
-    containment predicate over the stored filter words
-    (`Linear.java:134-140` at scale), exact post-verified. Shares q13's
-    oracle: two independent physical paths against one ANSI-SQL truth."""
+    """The SAME containment search as q13 with its strategy pinned: the
+    distributed Linear (I1) scan — an all-JVM codegen containment
+    predicate over the stored filter words (`Linear.java:134-140` at
+    scale), exact post-verified; ``via="auto"`` picks this plan for any
+    single query. Shares q13's oracle with q35's slab kernel: two
+    independent physical paths against one ANSI-SQL truth."""
     r = _doc_index(spark, sf_dir)
     docs = _t(spark, sf_dir, "documents")
     toks = ["lang=es", "tok=spark", "tok=window"]
@@ -662,7 +663,7 @@ def q29_bloom_search_linear(spark, sf_dir):
 
 
 def q35_bloom_search_slab_sql(spark, sf_dir):
-    """The SAME containment search as q13/q29 answered by the THIRD
+    """The SAME containment search as q13/q29 answered by the OTHER
     physical strategy: the bit-sliced slab kernel (`FlatBloofi.java:
     188-205`) evaluated ENTIRELY JVM-side — per slab chunk, the k query
     bit-rows AND together word-by-word via element_at/aggregate over the
@@ -670,7 +671,7 @@ def q35_bloom_search_slab_sql(spark, sf_dir):
     keys in place from the embedded key blob (query.py:
     search_keys_slab_sql_many). Slab compute complexity (O(k·N/64) word
     ANDs) with zero Arrow transfer of slab bytes to Python. Shares q13's
-    oracle: three independent physical paths against one ANSI-SQL
+    oracle: two independent physical paths against one ANSI-SQL
     truth."""
     r = _doc_index(spark, sf_dir)
     docs = _t(spark, sf_dir, "documents")

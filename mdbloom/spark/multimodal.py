@@ -58,8 +58,10 @@ def decode_image(payload: bytes) -> dict:
 
     * **PPM (P6)**: ASCII header ``P6 <w> <h> <maxval>`` with ``#``
       comments, then ``3·w·h`` binary RGB bytes (validated).
-    * **BMP**: ``BM`` magic; int32 width/height at offsets 18/22 (height
-      may be negative = top-down), uint16 bits-per-pixel at 28.
+    * **BMP**: ``BM`` magic; a 40-byte BITMAPINFOHEADER (size at offset
+      14) with ``biCompression`` 0 at offset 30; int32 width/height at
+      offsets 18/22 (height may be negative = top-down), uint16
+      bits-per-pixel at 28.
 
     Anything else raises ``ValueError`` — honest failure, never a
     fabricated shape (that is :func:`fake_decoder`'s job)."""
@@ -88,6 +90,14 @@ def decode_image(payload: bytes) -> dict:
             raise ValueError("PPM pixel data shorter than w*h*3")
         return {"height": h, "width": w, "channels": 3, "n_frames": 1}
     if payload[:2] == b"BM" and len(payload) >= 54:
+        hdr = struct.unpack_from("<I", payload, 14)[0]
+        comp = struct.unpack_from("<I", payload, 30)[0]
+        if hdr != 40 or comp != 0:
+            # other header layouts put width/height elsewhere (CORE: 12
+            # bytes, int16 dims), and RLE/bitfield pixel data is not w*h
+            raise ValueError(f"unsupported BMP (header size {hdr}, "
+                             f"compression {comp}): only uncompressed "
+                             "BITMAPINFOHEADER")
         w, h = struct.unpack_from("<ii", payload, 18)
         bits = struct.unpack_from("<H", payload, 28)[0]
         if w <= 0 or h == 0 or bits not in (8, 24, 32):

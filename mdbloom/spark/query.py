@@ -13,14 +13,14 @@ Query plan:
      `ContainerImpl.java:171`): the manifest (one small row per shard) is
      collected once; shards whose OR-summary lacks any query bit are never
      scanned — the distributed analogue of the Bloofi tree descent;
-  3. **slab scan** (`mapInPandas` over surviving slab chunks): AND the k
-     query-bit rows per chunk, emit (shard, slot) hits
-     (`FlatBloofi.java:188-205` word-parallel AND, whole chunks at a time);
-  4. hits ⋈ slotmap -> keys; storage ⋈ keys (left-semi) -> values.
+  3. **scan**: a single query is ONE SQL conjunction over the stored
+     filter words of the surviving shards' storage rows
+     (`Linear.java:134-140`); a batch ANDs the k query-bit rows of each
+     surviving slab chunk (`FlatBloofi.java:188-205` word-parallel AND)
+     and joins the hit keys back to storage.
 
 Every join key carries ``shard`` so the joins stay co-partitioned with the
-Parquet partition layout; the hits side is tiny for selective queries and
-broadcast-joins under AQE.
+Parquet partition layout.
 """
 
 from __future__ import annotations
@@ -38,8 +38,6 @@ from mdbloom import kernel as K
 from mdbloom.hashing import TokenMaskCache
 from mdbloom.shape import Shape
 from mdbloom.spark.build import IndexConfig
-
-HIT_SCHEMA = "shard int, slot long"
 
 # search_linear_many: max total word predicates for the SQL-text literal
 # form (driver parse cost and task-binary size grow ~linearly with preds:
@@ -127,46 +125,35 @@ def _hex_keys(blob: bytes | None) -> np.ndarray:
 class BloomIndexReader:
     """Query surface over a built index dir (see `build.BloomIndexWriter`).
 
-    Three physical containment-search strategies answer the same
-    semantics bit-identically (contract-tested, including which Bloom
-    false positives leak through). **Strategy selection:**
+    Containment search answers one semantics bit-identically across its
+    physical plans (contract-tested, including which Bloom false
+    positives leak through):
 
-    * :meth:`search_slab_sql_many` — **default batched strategy**
-      (VERDICT r4 item 3): same O(k·N/64) bit-sliced kernel evaluated as
-      SQL higher-order functions, all-JVM, zero Arrow transfer — the
-      only slab form with a demonstrated ≥0.8 N→4N scaling pair
-      (0.86-0.90, BENCH.md). Pays a per-batch plan-analysis constant
-      (~2s cold for a 20-query literal), amortized across a batch.
-    * :meth:`search_keys_many`/NumPy slab (``via="slab"``) — the
-      kernel-of-record: Arrow-batched bit-sliced NumPy kernel, lowest
-      per-SINGLE-query constant; bounded by aggregate DRAM bandwidth
-      (scaling pairs 0.35-0.56 on this host, hence not the batched
-      default).
-    * :meth:`search_linear_many` — tiny populations (≲10⁵ filters) or
-      one-off queries: O(rows·k) JVM scan, no slab artifacts touched,
-      cheapest plan to analyze.
+    * a **single query** (:meth:`search`, :meth:`search_rows`,
+      :meth:`search_verified`) runs the all-JVM linear storage
+      predicate: one whole-stage-codegen conjunction over the stored
+      filter words of the surviving shards — no slab artifact, no
+      storage join, no Python worker. ``via="slab"``/``"slab_sql"``
+      force the all-JVM slab kernel (:meth:`search_slab_sql`) instead;
+    * a **batch** runs :meth:`search_slab_sql_many` (the default past
+      the linear regime, VERDICT r4 item 3: the O(k·N/64) bit-sliced
+      kernel as SQL higher-order functions, the slab form with the
+      ≥0.8 N→4N scaling pairs), :meth:`search_linear_many` (tiny
+      populations), or the NumPy kernel-of-record
+      :meth:`search_keys_many` when ``via="slab"`` asks for it.
 
-    `search_many` / `search_rows` / `search_verified*` take ``via=`` to
-    pick one explicitly; ``via="auto"`` applies the table above
-    mechanically (:meth:`choose_strategy`): linear for tiny populations,
-    slab-SQL for batches, NumPy slab for large single interactive
-    queries."""
+    ``via="auto"`` applies :meth:`choose_strategy`, which has two
+    outcomes: ``linear`` for a single query or a tiny population,
+    ``slab_sql`` for a batch past it."""
 
-    # auto strategy selection (VERDICT r3 item 7): below this many live
-    # physical slots the O(rows·k) linear storage scan beats reading the
-    # slab artifacts at all — measured regime from BENCH.md (the slab
-    # paths win from ~10^5-10^6 filters up; linear's advantage is the
-    # skipped artifact read + cheapest possible plan)
+    # batched auto strategy selection (VERDICT r3 item 7): below this
+    # many live physical slots the O(rows·k) linear storage scan beats
+    # reading the slab artifacts at all — measured regime from BENCH.md
+    # (the slab paths win batches from ~10^5-10^6 filters up; linear's
+    # advantage is the skipped artifact read + cheapest possible plan)
     LINEAR_MAX_SLOTS = 100_000
 
-    def __init__(self, spark: SparkSession, path: str,
-                 prefer_jvm: bool = False):
-        """``prefer_jvm=True`` steers ``via="auto"`` to the all-JVM
-        slab-SQL strategy instead of the NumPy slab for large
-        populations — for deployments where Python workers / Arrow
-        transfer are the measured bottleneck (BENCH.md scaling pairs).
-        Results are bit-identical either way."""
-        self.prefer_jvm = prefer_jvm
+    def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
         if os.path.isdir(os.path.join(path, "pending")):
@@ -233,7 +220,7 @@ class BloomIndexReader:
         compaction, index slabs may still name tombstoned keys — those
         surface here as no rows, exactly like a Bloom false positive, so
         search soundness holds. ``keep_filter`` retains the stored
-        filter-words column (used by :meth:`search_linear`)."""
+        filter-words column (used by the linear predicates)."""
         if self._storage_base is None:
             from mdbloom.spark.storage import storage_backend
             self._storage_base = storage_backend(
@@ -256,26 +243,15 @@ class BloomIndexReader:
         key blobs (format v2 retired the physical slotmap table: one
         fewer full-data pass + partitioned write at build time). Slot
         ids are unique per shard; content-addressed keys carry all the
-        semantics."""
-        slabs = self.slabs().select("shard", "slot_lo", "n_slots",
-                                    "keys_blob")
-
-        def explode(iterator):
-            # one vectorized hexlify per CHUNK (≤ chunk_slots keys), never
-            # per-slot Python string slicing (VERDICT r2 item 4)
-            for pdf in iterator:
-                for shard, lo, n, blob in zip(
-                        pdf["shard"], pdf["slot_lo"], pdf["n_slots"],
-                        pdf["keys_blob"]):
-                    n = int(n)
-                    yield pd.DataFrame({
-                        "shard": np.full(n, int(shard), dtype=np.int32),
-                        "slot": int(lo) + np.arange(n),
-                        "key": _hex_keys(blob)[:n],
-                    })
-
-        return slabs.mapInPandas(explode,
-                                 schema="shard int, slot long, key string")
+        semantics. All-JVM: each chunk row inlines its ``n_slots`` keys
+        (16 bytes at slot*16 of ``keys_blob``, the same decode as the
+        slab-SQL kernel); ``array_repeat`` sizes the index array so an
+        empty chunk emits nothing."""
+        return self.slabs().selectExpr(
+            "shard",
+            "inline(transform(array_repeat(0, n_slots), (x, i) -> "
+            "named_struct('slot', slot_lo + i, 'key', "
+            "lower(hex(substring(keys_blob, i * 16 + 1, 16))))))")
 
     def slabs(self) -> DataFrame:
         if self._slabs_df is None:
@@ -584,7 +560,6 @@ class BloomIndexReader:
         unpruned" — the sound superset: a query surviving in most
         shards gains nothing from pruning anyway, and consumers share
         the empty-``sh`` plan convention for exactly this case)."""
-        import pandas as pd
 
         empty_idx = np.array([], dtype=np.int64)
         empty_val = np.array([], dtype=B.U64)
@@ -682,48 +657,10 @@ class BloomIndexReader:
     # ---------------- search ----------------
     def search_keys(self, tokens) -> DataFrame:
         """Containment search -> DataFrame (shard, slot, key) of candidate
-        index entries."""
-        qbits = self.query_bits(tokens)
-        shards = self._prune_single(qbits, tokens)
-        slotmap = self.slotmap()
-        if shards is not self.ALL_SHARDS and not shards:
-            return slotmap.where(F.lit(False))
-        if qbits.size == 0:
-            # empty query matches everything (ContainerImpl.java:159-169)
-            return slotmap
-        m = self.shape.m
-        qbits_l = qbits.tolist()
-        slabs = self._where_shards(self.slabs(), shards)
-
-        def scan(iterator):
-            qb = np.asarray(qbits_l, dtype=np.int64)
-            for pdf in iterator:
-                outs = []
-                for _, row in pdf.iterrows():
-                    slab = np.ascontiguousarray(
-                        row["slab"], dtype=np.int64).view(B.U64) \
-                        .reshape(m, -1)
-                    hits = K.query_slab(slab, qb, int(row["n_slots"]))
-                    if hits.size:
-                        blob = row["keys_blob"]
-                        if blob is None:  # mixed-format artifact
-                            raise ValueError(
-                                "slab row lacks keys_blob: index mixes "
-                                "on-disk formats; rebuild (resume "
-                                "forces this via config format_version)")
-                        outs.append(pd.DataFrame({
-                            "shard": int(row["shard"]),
-                            "slot": hits + int(row["slot_lo"]),
-                            "key": _hex_keys(blob)[hits],
-                        }))
-                if outs:
-                    yield pd.concat(outs)
-
-        # chunk rows embed their slot keys (one fixed-width blob): the
-        # scan resolves slot -> key locally, no slotmap join. Format v3+
-        # always embeds keys_blob and __init__ rejects older artifacts,
-        # so there is no fallback path.
-        return slabs.mapInPandas(scan, schema=HIT_SCHEMA + ", key string")
+        index entries: the all-JVM slab kernel
+        (:meth:`search_keys_slab_sql_many`) over a one-query batch."""
+        return self.search_keys_slab_sql_many(
+            {"q": list(tokens)}).drop("query")
 
     #: manifest row count above which batched planning switches from the
     #: driver-matrix prune loop to the DISTRIBUTED planner
@@ -788,38 +725,41 @@ class BloomIndexReader:
         :data:`DRIVER_PRUNE_MAX_SHARDS` manifest rows the driver-matrix
         prune loop runs (O(ms), zero jobs); past it, ONE distributed
         planning pass (:meth:`prune_shards_many_distributed`) prunes
-        every query with bounded driver memory, and over-cap survivor
-        lists degrade to ALL_SHARDS — which every consumer compresses
-        to its no-restriction plan form instead of materializing Q×S
-        shard lists."""
+        every query with bounded driver memory. A query that keeps every
+        shard, or whose survivors exceed the distributed planner's cap,
+        comes back as ALL_SHARDS — which every consumer compresses to its
+        no-restriction plan form instead of materializing Q×S shard
+        lists."""
         if self._jvm_hasher is not None:
             # ONE tiny hash job for every token of every query — per-query
             # planning jobs would dominate batched-search latency
             self._jvm_hasher._ensure(
                 {t for toks in queries.values() for t in toks})
-        if self._manifest_row_count() > self.DRIVER_PRUNE_MAX_SHARDS:
-            pruned = self.prune_shards_many_distributed(queries)
-            out = []
-            for name, toks in queries.items():
-                qbits = self.query_bits(toks)
-                if qbits.size == 0:
-                    out.append((name, qbits, []))
-                    continue
-                sh = pruned[name]
-                if sh is self.ALL_SHARDS:
-                    out.append((name, qbits, self.ALL_SHARDS))
-                else:
-                    out.append((name, qbits, list(sh) if sh else None))
-            return out
+        n_total = self._manifest_row_count()
+        pruned = (self.prune_shards_many_distributed(queries)
+                  if n_total > self.DRIVER_PRUNE_MAX_SHARDS else None)
         out = []
         for name, toks in queries.items():
             qbits = self.query_bits(toks)
             if qbits.size == 0:
                 out.append((name, qbits, []))
                 continue
-            shards = self.prune_shards(qbits, toks)
-            out.append((name, qbits, list(shards) if shards else None))
+            sh = (pruned[name] if pruned is not None
+                  else self.prune_shards(qbits, toks))
+            if sh is self.ALL_SHARDS or (sh and len(sh) == n_total):
+                sh = self.ALL_SHARDS  # kept every shard: no restriction
+            out.append((name, qbits, sh or None))  # None: definite miss
         return out
+
+    def _match_all_keys(self, names: list) -> DataFrame:
+        """(query, shard, slot, key): every slot for each match-all (empty)
+        query name — the batched key strategies' shared answer to an empty
+        query (`ContainerImpl.java:159-169`); no names -> no rows."""
+        slotmap = self.slotmap()
+        out = slotmap.where(F.lit(False)).withColumn("query", F.lit(""))
+        for name in names:
+            out = out.unionByName(slotmap.withColumn("query", F.lit(name)))
+        return out.select("query", "shard", "slot", "key")
 
     def search_keys_many(self, queries: dict) -> DataFrame:
         """Batched containment search: ``{name: [tokens...]}`` -> one slab
@@ -829,32 +769,7 @@ class BloomIndexReader:
         share one Spark job (one slab read, one slotmap join) instead of Q
         job chains — per-query latency amortizes to ~zero. Per-query shard
         pruning still applies inside the scan via a broadcast plan."""
-        plans = {}
         match_all: list[str] = []
-        all_shards: set[int] = set()
-        for name, qbits, shards in self._plan_query_batch(queries):
-            if qbits.size == 0:
-                match_all.append(name)  # empty query matches everything
-                continue
-            if shards is None:
-                continue  # pruned to zero shards: definite miss
-            if shards is self.ALL_SHARDS:
-                plans[name] = (qbits.tolist(), self.ALL_SHARDS)
-                continue
-            plans[name] = (qbits.tolist(), set(shards))
-            all_shards.update(shards)
-        slotmap = self.slotmap()
-        empty = (slotmap.where(F.lit(False))
-                 .withColumn("query", F.lit(""))
-                 .select("query", "shard", "slot", "key"))
-        all_part = empty
-        for name in match_all:
-            all_part = all_part.unionByName(
-                slotmap.withColumn("query", F.lit(name))
-                .select("query", "shard", "slot", "key"))
-        if not plans:
-            return all_part
-        m = self.shape.m
         # per-shard batched plan: the queries that survived pruning for
         # shard s, as ONE concatenated bit array + reduceat offsets, so
         # the executor evaluates all of them with a single vectorized
@@ -865,19 +780,20 @@ class BloomIndexReader:
         # O(pruned pairs + global queries), never the Q×S cross product
         # (VERDICT r4 item 4 — same compression the slab-SQL strategy's
         # empty-``sh`` plan structs use).
-        n_shards_total = len(self._prune_matrices()[0]) \
-            if self._manifest_row_count() <= self.DRIVER_PRUNE_MAX_SHARDS \
-            else -1  # huge manifest: never load driver matrices here
         global_entries: list[tuple] = []
         shard_entries: dict[int, list] = {}
-        unpruned = False
-        for name, (qb, shards) in plans.items():
-            if shards is self.ALL_SHARDS or len(shards) == n_shards_total:
+        for name, qbits, shards in self._plan_query_batch(queries):
+            qb = qbits.tolist()
+            if not qb:
+                match_all.append(name)  # empty query matches everything
+            elif shards is self.ALL_SHARDS:
                 global_entries.append((name, qb))
-                unpruned = True
-            else:
+            elif shards is not None:  # None: definite miss
                 for s in shards:
                     shard_entries.setdefault(s, []).append((name, qb))
+        if not (global_entries or shard_entries):
+            return self._match_all_keys(match_all)
+        m = self.shape.m
 
         def _pack(entries):
             offs, concat = [], []
@@ -889,8 +805,8 @@ class BloomIndexReader:
         shard_plans = {s: _pack(e) for s, e in shard_entries.items()}
         global_plan = _pack(global_entries) if global_entries else None
         slabs = self.slabs()
-        if not unpruned:
-            slabs = slabs.where(F.col("shard").isin(sorted(all_shards)))
+        if not global_entries:
+            slabs = slabs.where(F.col("shard").isin(sorted(shard_entries)))
 
         def scan(iterator):
             def _arr(p):
@@ -939,7 +855,8 @@ class BloomIndexReader:
         # artifacts) — keys resolve in-scan, no slotmap-join fallback
         joined = slabs.mapInPandas(
             scan, schema="query string, shard int, slot long, key string")
-        return joined.unionByName(all_part) if match_all else joined
+        return (joined.unionByName(self._match_all_keys(match_all))
+                if match_all else joined)
 
     def search_many(self, queries: dict, via: str = "auto") -> DataFrame:
         """Batched search -> storage rows tagged by query name.
@@ -949,19 +866,19 @@ class BloomIndexReader:
         all-JVM **slab-SQL** strategy (VERDICT r4 item 3: the slab form
         with the ≥0.8 scaling pairs). ``via="slab"`` forces the NumPy
         kernel-of-record path; ``via="linear"``/``via="slab_sql"`` force
-        the others. All three return identical rows (contract-tested).
+        the others. All three return identical rows in one column order,
+        ``(query, *storage columns)`` (contract-tested).
 
-        shuffle_hash hint (slab path): both join sides are millions of
+        shuffle_hash hint (slab paths): both join sides are millions of
         narrow rows for broad query batches — a hash join skips the two
         full sorts an SMJ would pay (AQE still downgrades to broadcast
         when the key side is tiny)."""
         via = self._resolve_via(via, len(queries))
         if via == "linear":
             return self.search_linear_many(queries)
-        if via == "slab_sql":
-            return self.search_slab_sql_many(queries)
-        keys = (self.search_keys_many(queries)
-                .select("query", "shard", "key")
+        keys = (self.search_keys_slab_sql_many(queries) if via == "slab_sql"
+                else self.search_keys_many(queries))
+        keys = (keys.select("query", "shard", "key")
                 # a filter stored under several ids can occupy several
                 # slots (the slab pass dedups keys only within a task's
                 # buffer — cross-batch/task duplicates are data-dependent);
@@ -970,52 +887,53 @@ class BloomIndexReader:
                 # inner join or every extra slot would duplicate each
                 # matching storage row
                 .dropDuplicates(["query", "shard", "key"]))
-        return self.storage().join(keys.hint("shuffle_hash"),
-                                   ["shard", "key"], "inner")
+        storage = self.storage()
+        # (query, *storage) — the same column order as the linear form
+        return (storage.join(keys.hint("shuffle_hash"), ["shard", "key"],
+                             "inner")
+                .select("query", *storage.columns))
+
+    def _word_pairs(self, qbits) -> list[tuple[int, int]]:
+        """The query filter's nonzero words as (1-based word index, signed
+        64-bit mask) pairs — the operands of the linear containment
+        predicates (single and batched)."""
+        qwords = B.from_bits(qbits, self.shape.m).view(np.int64)
+        return [(int(w) + 1, int(qwords[w]))
+                for w in np.flatnonzero(qwords != 0)]
+
+    def _linear_where(self, qbits, tokens, preds: list[str]) -> DataFrame:
+        """Storage rows of the shards the query keeps whose stored filter
+        words satisfy every SQL predicate in ``preds`` — parsed JVM-side
+        as ONE ``F.expr`` conjunction (a py4j Column chain costs ~5 round
+        trips per query word), evaluated in whole-stage codegen."""
+        shards = self._prune_single(qbits, tokens)
+        if shards is not self.ALL_SHARDS and not shards:
+            return self.storage().where(F.lit(False))
+        df = self._where_shards(self.storage(keep_filter=True), shards)
+        if preds:
+            df = df.where(F.expr(" AND ".join(preds)))
+        return df.drop("filter")
 
     def search(self, tokens) -> DataFrame:
         """Containment search -> storage rows (shard, key, <ids>,
         <payload>): values whose filter has all query bits (may include
         Bloom false positives at the Shape's designed rate).
 
-        No join hint: AQE sizes the hit set at runtime and broadcasts it
-        when small (a selective query then touches storage with ZERO
-        shuffle — the 100 TB shape), falling back to a shuffled hash
-        join only when the hit set is genuinely broad. The batched
-        search_many path, broad by construction, keeps an explicit
-        shuffle_hash hint instead."""
-        keys = self.search_keys(tokens).select("shard", "key")
-        return self.storage().join(keys, ["shard", "key"], "left_semi")
-
-    def search_linear(self, tokens) -> DataFrame:
-        """Distributed Linear (I1) containment scan — `Linear.java:134-140`
-        re-expressed as a pure Spark SQL predicate over the stored filter
-        words: for every nonzero query word w,
+        Distributed Linear (I1) scan — `Linear.java:134-140` re-expressed
+        as one Spark SQL predicate over the stored filter words of the
+        surviving shards: for every nonzero query word w,
         ``(filter[w] & qword) == qword``. Zero Python, whole-stage
-        codegen, touches only the storage table (no slab artifacts).
-        Complements the bit-sliced slab path: the slab wins when the
-        index is far smaller than storage and many queries batch
-        (O(k·N/64) word-ANDs, amortized scans); this path wins for
-        one-off scans, JVM-only deployments, or hosts where parallel
-        Python/NumPy is bandwidth-capped — and doubles as an independent
-        implementation for cross-checking results (strategy-equivalence
-        test at Spark scale). Same driver-side gate pruning as
-        :meth:`search`; same output rows."""
+        codegen, touches only the storage table: no slab artifact read
+        and no storage join, so a selective query costs one scan job.
+        Empty query matches everything (`ContainerImpl.java:159-169`)."""
         qbits = self.query_bits(tokens)
-        df = self.storage(keep_filter=True)
         if qbits.size == 0:
-            return df.drop("filter")  # empty query matches everything
-        shards = self._prune_single(qbits, tokens)
-        if shards is not self.ALL_SHARDS and not shards:
-            return df.where(F.lit(False)).drop("filter")
-        qwords = B.from_bits(qbits, self.shape.m).view(np.int64)
-        cond = F.lit(True) if shards is self.ALL_SHARDS \
-            else F.col("shard").isin([int(s) for s in shards])
-        for w in np.flatnonzero(qwords != 0):
-            mask = int(qwords[w])
-            cond = cond & (F.element_at("filter", int(w) + 1)
-                           .bitwiseAND(F.lit(mask)) == F.lit(mask))
-        return df.where(cond).drop("filter")
+            return self.storage()
+        return self._linear_where(qbits, tokens, [
+            f"(element_at(`filter`, {i}) & {_sql_bigint(v)}) = "
+            f"{_sql_bigint(v)}" for i, v in self._word_pairs(qbits)])
+
+    search_linear = search  # the linear plan's explicit name
 
     def search_linear_many(self, queries: dict) -> DataFrame:
         """Batched distributed Linear (I1): ``{name: [tokens...]}`` ->
@@ -1064,10 +982,6 @@ class BloomIndexReader:
         so the common case adds ~nothing to the literal. Empty queries
         match everything (`ContainerImpl.java:159-169`): an empty pair
         list makes ``forall`` vacuously true."""
-        m = self.shape.m
-        n_shards_total = len(self._prune_matrices()[0]) \
-            if self._manifest_row_count() <= self.DRIVER_PRUNE_MAX_SHARDS \
-            else -1  # huge manifest: never load driver matrices here
         plans: list[tuple[str, list[tuple[int, int]], list[int]]] = []
         all_shards: set[int] = set()
         any_unrestricted = False
@@ -1078,17 +992,14 @@ class BloomIndexReader:
                 continue
             if shards is None:
                 continue  # pruned to zero shards: definite miss
-            qwords = B.from_bits(qbits, m).view(np.int64)
-            pairs = [(int(w) + 1, int(qwords[w]))
-                     for w in np.flatnonzero(qwords != 0)]
             # [] = kept every shard = no per-query restriction needed
-            if shards is self.ALL_SHARDS or len(shards) == n_shards_total:
+            if shards is self.ALL_SHARDS:
                 sh: list[int] = []
                 any_unrestricted = True
             else:
                 sh = list(shards)
                 all_shards.update(shards)
-            plans.append((name, pairs, sh))
+            plans.append((name, self._word_pairs(qbits), sh))
         df = self.storage(keep_filter=True)
         out_cols = [c for c in df.columns if c != "filter"]
         if not plans:
@@ -1204,9 +1115,6 @@ class BloomIndexReader:
         a plans-as-data broadcast join above ``SQL_LITERAL_MAX_PREDS``
         total query bits."""
         m = self.shape.m
-        n_shards_total = len(self._prune_matrices()[0]) \
-            if self._manifest_row_count() <= self.DRIVER_PRUNE_MAX_SHARDS \
-            else -1  # huge manifest: never load driver matrices here
         plans: list[tuple[str, list[int], list[int]]] = []
         match_all: list[str] = []
         all_shards: set[int] = set()
@@ -1217,24 +1125,15 @@ class BloomIndexReader:
                 continue
             if shards is None:
                 continue  # pruned to zero shards: definite miss
-            if shards is self.ALL_SHARDS or len(shards) == n_shards_total:
+            if shards is self.ALL_SHARDS:
                 sh: list[int] = []  # empty sh = no shard restriction
                 any_unrestricted = True
             else:
                 sh = list(shards)
                 all_shards.update(shards)
             plans.append((name, [int(b) for b in qbits], sh))
-        slotmap = self.slotmap()
-        empty = (slotmap.where(F.lit(False))
-                 .withColumn("query", F.lit(""))
-                 .select("query", "shard", "slot", "key"))
-        all_part = empty
-        for name in match_all:
-            all_part = all_part.unionByName(
-                slotmap.withColumn("query", F.lit(name))
-                .select("query", "shard", "slot", "key"))
         if not plans:
-            return all_part
+            return self._match_all_keys(match_all)
         slabs = self.slabs()
         if not any_unrestricted:
             slabs = slabs.where(F.col("shard").isin(sorted(all_shards)))
@@ -1263,57 +1162,52 @@ class BloomIndexReader:
                     f"s -> {hits})))")
             joined = slabs.selectExpr("shard", expr)
         out = joined.select("query", "shard", "slot", "key")
-        return out.unionByName(all_part) if match_all else out
+        return (out.unionByName(self._match_all_keys(match_all))
+                if match_all else out)
 
     def search_slab_sql_many(self, queries: dict) -> DataFrame:
         """Batched all-JVM slab search -> storage rows tagged by query
         (the :meth:`search_many` contract on the
         :meth:`search_keys_slab_sql_many` strategy)."""
-        keys = (self.search_keys_slab_sql_many(queries)
-                .select("query", "shard", "key")
-                # same cross-buffer duplicate-slot dedup as search_many
-                .dropDuplicates(["query", "shard", "key"]))
-        return self.storage().join(keys.hint("shuffle_hash"),
-                                   ["shard", "key"], "inner")
+        return self.search_many(queries, via="slab_sql")
 
     def search_slab_sql(self, tokens) -> DataFrame:
         """Single-query form: storage rows whose filter contains the query
-        bits, evaluated by the all-JVM slab kernel. Same rows as
-        :meth:`search` / :meth:`search_linear`."""
-        keys = (self.search_keys_slab_sql_many({"q": list(tokens)})
-                .select("shard", "key"))
+        bits, evaluated by the all-JVM slab kernel (:meth:`search_keys`).
+        Same rows as :meth:`search`."""
+        keys = self.search_keys(tokens).select("shard", "key")
         return self.storage().join(keys, ["shard", "key"], "left_semi")
 
     def choose_strategy(self, n_queries: int = 1) -> str:
         """Mechanical strategy selection for ``via="auto"`` — the
-        measured regimes from BENCH.md as code, so a user gets the right
-        physical plan without reading the bench notes (all three return
+        measured regimes as code, so a user gets the right physical plan
+        without reading the bench notes (both outcomes return
         bit-identical rows, so this is purely a cost decision):
 
         ======================  ============  =============================
-        condition               choice        why (BENCH.md regime)
+        condition               choice        why (measured regime)
         ======================  ============  =============================
-        live slots ≤ 10⁵        ``linear``    O(rows·k) storage scan beats
-                                              touching slab artifacts at
-                                              tiny populations / one-offs
-        else, n_queries > 1     ``slab_sql``  the batched DEFAULT (VERDICT
-        or prefer_jvm                         r4 item 3): same O(k·N/64)
-                                              kernel, all-JVM, zero Arrow
-                                              transfer — the slab form
-                                              with the ≥0.8 N→4N scaling
-                                              pairs (0.86-0.90); its
-                                              per-batch plan constant
-                                              amortizes across the batch
-        else                    ``slab``      NumPy bit-sliced kernel
-                                              (kernel-of-record), lowest
-                                              single-query constant
+        one query, or live      ``linear``    one codegen storage scan: no
+        slots ≤ 10⁵                           slab read, no storage join,
+                                              no Python worker — the
+                                              lowest per-query constant
+                                              (perfbench ``lookup``), and
+                                              the cheapest plan at tiny
+                                              populations
+        else (a batch)          ``slab_sql``  the batched DEFAULT (VERDICT
+                                              r4 item 3): O(k·N/64)
+                                              bit-sliced kernel, all-JVM,
+                                              zero Arrow transfer — the
+                                              slab form with the ≥0.8
+                                              N→4N scaling pairs
+                                              (0.86-0.90); its per-batch
+                                              plan constant amortizes
+                                              across the batch
         ======================  ============  =============================
         """
-        if self.slot_count() <= self.LINEAR_MAX_SLOTS:
+        if n_queries <= 1 or self.slot_count() <= self.LINEAR_MAX_SLOTS:
             return "linear"
-        if n_queries > 1 or self.prefer_jvm:
-            return "slab_sql"
-        return "slab"
+        return "slab_sql"
 
     def _resolve_via(self, via: str, n_queries: int = 1) -> str:
         if via == "auto":
@@ -1325,22 +1219,21 @@ class BloomIndexReader:
         return via
 
     def search_rows(self, tokens, source_df: DataFrame,
-                    via: str = "slab") -> DataFrame:
+                    via: str = "auto") -> DataFrame:
         """Search and join back to the original table on the id columns.
-        ``via``: "slab" (bit-sliced index scan, NumPy kernel), "linear"
-        (all-JVM storage scan, :meth:`search_linear`), "slab_sql"
-        (bit-sliced index scan, all-JVM, :meth:`search_slab_sql`) —
-        identical results — or "auto" (:meth:`choose_strategy`)."""
+        ``via``: "linear" (the storage predicate, :meth:`search`) or
+        "slab"/"slab_sql" (the all-JVM slab kernel,
+        :meth:`search_slab_sql`) — identical results — or "auto"
+        (:meth:`choose_strategy`: linear for a single query)."""
         via = self._resolve_via(via)
         id_cols = list(self.cfg.id_columns)
-        hits = (self.search_linear(tokens) if via == "linear"
-                else self.search_slab_sql(tokens) if via == "slab_sql"
-                else self.search(tokens))
+        hits = (self.search(tokens) if via == "linear"
+                else self.search_slab_sql(tokens))
         hits = hits.select(*id_cols).dropDuplicates(id_cols)
         return source_df.join(hits, id_cols, "left_semi")
 
     def search_verified(self, tokens, source_df: DataFrame,
-                        via: str = "slab") -> DataFrame:
+                        via: str = "auto") -> DataFrame:
         """Search, then post-verify exact containment of every token in the
         source row — removes Bloom false positives, giving exact results
         (the pattern FIXTURES §5 uses for DuckDB-checkable oracles)."""
@@ -1467,32 +1360,20 @@ class BloomIndexReader:
         asserted bit-identical in tests. An empty query filter falls
         back to the word-compare (all words zero) under either
         ``via``."""
-        m = self.shape.m
-        if self._jvm_hasher is not None:
-            qbits = self._jvm_hasher.positions(list(tokens), self.shape)
-        else:
-            qbits = np.flatnonzero(B.unpack(
-                self._cache.filter_for(list(tokens)), m)).astype(np.int64)
-        shards = self._prune_single(qbits, tokens)
-        if shards is not self.ALL_SHARDS and not shards:
-            return self.storage().where(F.lit(False))
+        qbits = self.query_bits(tokens)
         if via == "slab" and qbits.size:
-            keys = self._where_shards(
-                self.search_keys(tokens).select("shard", "key"), shards)
+            # search_keys prunes shards exactly like the word-compare
+            keys = self.search_keys(tokens).select("shard", "key")
             cand = (self.storage(keep_filter=True)
                     .join(keys, ["shard", "key"], "left_semi"))
             popcnt = F.aggregate(
                 "filter", F.lit(0).cast("long"),
                 lambda a, w: a + F.bit_count(w))
             return cand.where(popcnt == int(qbits.size)).drop("filter")
-        qwords = B.from_bits(qbits, m).view(np.int64)
-        cond = F.lit(True) if shards is self.ALL_SHARDS \
-            else F.col("shard").isin([int(s) for s in shards])
-        for i in range(len(qwords)):
-            cond = cond & (F.element_at("filter", i + 1)
-                           == F.lit(int(qwords[i])))
-        return (self.storage(keep_filter=True)
-                .where(cond).drop("filter"))
+        qwords = B.from_bits(qbits, self.shape.m).view(np.int64)
+        return self._linear_where(qbits, tokens, [
+            f"element_at(`filter`, {i + 1}) = {_sql_bigint(int(v))}"
+            for i, v in enumerate(qwords)])
 
     def get_many(self, queries: dict) -> DataFrame:
         """Batched exact (bit-for-bit) get: ``{name: [tokens...]}`` ->

@@ -368,23 +368,22 @@ def test_prune_shards_many_distributed_matches_driver(spark, reader):
 
 
 def test_choose_strategy_regimes(spark, reader, monkeypatch):
-    """via="auto" applies the documented BENCH.md regimes mechanically
-    (VERDICT r3 item 7 + r4 item 3): tiny population -> linear storage
-    scan; large population -> NumPy slab for a SINGLE query but the
-    all-JVM slab-SQL path for any BATCH (the slab form with the >=0.8
-    N->4N scaling pairs); prefer_jvm flips the single-query regime to
-    slab-SQL too. Explicit via always wins; junk is rejected."""
+    """via="auto" has two outcomes: a single query or a tiny population
+    -> the linear storage predicate; a batch past the tiny regime -> the
+    all-JVM slab-SQL path (VERDICT r4 item 3: the slab form with the
+    >=0.8 N->4N scaling pairs). Explicit via always wins; junk is
+    rejected."""
     assert reader.slot_count() <= reader.LINEAR_MAX_SLOTS
     assert reader.choose_strategy() == "linear"
     assert reader._resolve_via("auto") == "linear"
     assert reader.choose_strategy(n_queries=64) == "linear"
     monkeypatch.setattr(reader, "slot_count", lambda: 10_000_000)
-    assert reader.choose_strategy() == "slab"
+    # a single query stays linear at any population
+    assert reader.choose_strategy() == "linear"
+    assert reader._resolve_via("auto") == "linear"
     # batched default is slab-SQL (VERDICT r4 item 3)
     assert reader.choose_strategy(n_queries=2) == "slab_sql"
     assert reader._resolve_via("auto", 256) == "slab_sql"
-    monkeypatch.setattr(reader, "prefer_jvm", True)
-    assert reader.choose_strategy() == "slab_sql"
     # explicit choice bypasses the selector entirely
     assert reader._resolve_via("linear") == "linear"
     with pytest.raises(ValueError):
@@ -401,7 +400,7 @@ def test_search_verified_auto_matches_explicit(spark, reader):
                        .select("conv_id", "turn_idx").toPandas()
                        .itertuples(index=False)))
     auto = got("auto")
-    assert auto == got("slab") == got("linear")
+    assert auto == got("linear") == got("slab") == got("slab_sql")
     qs = {"a": toks, "absent": ["tok=zzznope"]}
     batched = reader.search_verified_many(qs, df, via="auto").toPandas()
     assert set(map(tuple,
@@ -680,6 +679,11 @@ def test_distributed_planner_wired_into_strategies(spark, reader,
     want = {via: rows(reader.search_many(queries, via=via))
             for via in ("slab", "linear", "slab_sql")}
     assert want["slab"] == want["linear"] == want["slab_sql"]
+    # one result schema: every strategy yields (query, *storage columns)
+    columns = {via: reader.search_many(queries, via=via).columns
+               for via in ("slab", "linear", "slab_sql", "auto")}
+    assert all(c == columns["linear"] for c in columns.values()), columns
+    assert columns["linear"][0] == "query"
 
     monkeypatch.setattr(reader, "DRIVER_PRUNE_MAX_SHARDS", 0)
     for via in ("slab", "linear", "slab_sql"):

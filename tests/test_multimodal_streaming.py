@@ -55,7 +55,7 @@ def test_default_decoder_rejects_junk_clearly(spark):
 def test_real_decoders_parse_headers_exactly():
     """Pure-function coverage of the built-in codecs: PPM with comment
     lines, top-down (negative-height) BMP, stereo 16-bit WAV — plus
-    truncation rejection."""
+    truncation and unreadable-BMP-header rejection."""
     import struct
     ppm = b"P6\n# a comment\n5 3\n255\n" + bytes(5 * 3 * 3)
     assert M.decode_image(ppm) == {"height": 3, "width": 5,
@@ -67,6 +67,19 @@ def test_real_decoders_parse_headers_exactly():
                          0, 0, 0, 0) + bytes(120))
     assert M.decode_image(bmp) == {"height": 3, "width": 10,
                                    "channels": 4, "n_frames": 1}
+    # headers the decoder cannot read: a 12-byte BITMAPCOREHEADER (int16
+    # dims at other offsets) and an RLE8-compressed BITMAPINFOHEADER
+    # (its first pixel bytes read as 24 bpp at offset 28, so a decoder
+    # that skips the header-size check returns a fabricated shape)
+    core = (b"BM" + struct.pack("<IHHI", 26 + 64, 0, 0, 26)
+            + struct.pack("<IHHHH", 12, 10, 3, 1, 24)
+            + struct.pack("<HH", 0, 24) + bytes(60))
+    rle = (b"BM" + struct.pack("<IHHI", 54 + 40, 0, 0, 54)
+           + struct.pack("<IiiHHIIiiII", 40, 10, 3, 1, 8, 1, 40,
+                         0, 0, 0, 0) + bytes(40))
+    for bad in (core, rle):
+        with pytest.raises(ValueError, match="unsupported BMP"):
+            M.decode_image(bad)
     fmt = struct.pack("<HHIIHH", 1, 2, 44100, 44100 * 4, 4, 16)
     pcm = bytes(44100 * 4)  # exactly 1 second stereo
     wav = (b"RIFF" + struct.pack("<I", 4 + 8 + len(fmt) + 8 + len(pcm))

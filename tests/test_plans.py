@@ -8,7 +8,10 @@ import pytest
 
 from mdbloom.spark.build import BloomIndexWriter, IndexConfig
 from mdbloom.spark.query import BloomIndexReader
-from mdbloom.spark.transcripts import synthesize_transcripts
+from mdbloom.spark.transcripts import (
+    synthesize_transcripts,
+    synthesize_transcripts_pandas,
+)
 
 
 def plan_str(df, mode: str = "formatted") -> str:
@@ -49,13 +52,32 @@ def test_get_many_pushes_key_in_list(reader):
     assert any("In(key" in ln or "In(`key`" in ln for ln in pushed), pushed
 
 
-def test_linear_search_is_all_jvm_codegen(reader):
+def test_linear_search_is_all_jvm_codegen(spark, reader):
+    """Every single-query surface plans without a Python node: the
+    linear predicate (search, search_rows/search_verified under auto),
+    the all-JVM slab kernel (search_keys, get_bitexact via="slab"), and
+    the content-key get — including the empty query's slot listing."""
     toks = reader.transcript_query_tokens("assistant", None, ["w00002"])
-    plan = plan_str(reader.search_linear(toks))
-    assert "codegen id" in plan  # whole-stage codegen spans
-    for py_node in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas",
-                    "FlatMapGroupsInPandas"):
-        assert py_node not in plan, py_node
+    # a source table without Python nodes of its own
+    src = spark.createDataFrame(synthesize_transcripts_pandas(800, seed=42))
+    surfaces = {
+        "search_linear": reader.search_linear(toks),
+        "search": reader.search(toks),
+        "search_keys": reader.search_keys(toks),
+        "search_keys_empty": reader.search_keys([]),
+        "search_rows_auto": reader.search_rows(toks, src, via="auto"),
+        "search_verified": reader.search_verified(toks, src),
+        "get": reader.get(toks),
+        "get_bitexact_slab": reader.get_bitexact(toks, via="slab"),
+        "get_bitexact_linear": reader.get_bitexact(toks),
+    }
+    for name, df in surfaces.items():
+        plan = plan_str(df)
+        if name in ("search_linear", "search", "get_bitexact_linear"):
+            assert "codegen id" in plan, name  # whole-stage codegen spans
+        for py_node in ("ArrowEvalPython", "BatchEvalPython",
+                        "MapInPandas", "FlatMapGroupsInPandas"):
+            assert py_node not in plan, (name, py_node)
 
 
 def test_linear_search_many_is_all_jvm_codegen(reader):

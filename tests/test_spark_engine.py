@@ -127,13 +127,39 @@ def test_search_superset_of_exact_and_fpr_bounded(spark, built_index,
 
 
 def test_search_linear_equals_slab_search(spark, built_index):
-    """Strategy equivalence at Spark scale: the all-JVM Linear scan
-    (search_linear, codegen predicate over stored filter words) must
-    return exactly the rows of the bit-sliced slab path for the same
-    query — including empty-query (all rows), definite-miss (pruned to
-    nothing), and multi-dimension queries. Its plan must be pure JVM:
-    no Arrow/Python eval nodes."""
+    """Strategy equivalence at Spark scale against a LOCAL oracle: the
+    linear storage predicate (search) and the all-JVM slab kernel
+    (search_slab_sql) must both return exactly the rows that
+    ``kernel.query_slab`` finds over the index's own slab chunks, read
+    to pandas, in the shards the gate keeps — mapped slot -> key through
+    the chunk's key blob, then joined to storage. Covers empty-query
+    (all rows), definite-miss (pruned to nothing), and multi-dimension
+    queries. Both plans must be pure JVM: no Arrow/Python eval nodes."""
+    from mdbloom import kernel as K
     r = BloomIndexReader(spark, built_index)
+    slabs = r.slabs().select("shard", "n_slots", "slab",
+                             "keys_blob").toPandas()
+    stored = r.storage().select("shard", "key", "conv_id",
+                                "turn_idx").toPandas()
+
+    def oracle(toks):
+        qbits = r.query_bits(toks)
+        kept = set(r.prune_shards(qbits, toks))
+        keys = set()
+        for shard, n, slab, blob in slabs.itertuples(index=False):
+            if shard not in kept:
+                continue
+            words = np.asarray(slab, dtype=np.int64).view(np.uint64)
+            for s in K.query_slab(words.reshape(r.shape.m, -1), qbits,
+                                  int(n)):
+                keys.add((shard, bytes(blob[16 * s:16 * s + 16]).hex()))
+        return {(c, t) for sh, k, c, t in stored.itertuples(index=False)
+                if (sh, k) in keys}
+
+    def rows(df):
+        return set(map(tuple, df.select("conv_id", "turn_idx")
+                       .toPandas().itertuples(index=False)))
+
     cases = [
         ["role=assistant", "tool=Bash", "tok=w00000"],
         ["tok=w00042"],
@@ -142,19 +168,11 @@ def test_search_linear_equals_slab_search(spark, built_index):
         [],
     ]
     for toks in cases:
-        a = set(map(tuple, r.search(toks).select("conv_id", "turn_idx")
-                    .toPandas().itertuples(index=False)))
-        b = set(map(tuple, r.search_linear(toks)
-                    .select("conv_id", "turn_idx")
-                    .toPandas().itertuples(index=False)))
-        assert a == b, toks
-        # third strategy: the bit-sliced slab kernel evaluated all-JVM
-        # (search_slab_sql) — same rows again
-        c = set(map(tuple, r.search_slab_sql(toks)
-                    .select("conv_id", "turn_idx")
-                    .toPandas().itertuples(index=False)))
-        assert a == c, toks
-    for probe in (r.search_linear(cases[0]),
+        want = oracle(toks)
+        assert rows(r.search(toks)) == want, toks
+        assert rows(r.search_slab_sql(toks)) == want, toks
+    assert len(oracle([])) == len(stored)
+    for probe in (r.search(cases[0]),
                   r.search_slab_sql(cases[0])):
         plan = probe._jdf.queryExecution().executedPlan().toString()
         assert "InPandas" not in plan and "ArrowEval" not in plan
