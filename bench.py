@@ -185,8 +185,9 @@ def main():
 
     def search_batched():
         # via="slab" pins this key to the NumPy slab kernel it has
-        # always measured — search_many's DEFAULT is now auto->slab_sql
-        # for batches (VERDICT r4 item 3), measured by its own keys below
+        # always measured — search_many's DEFAULT routes the batch by its
+        # planned row-queries (linear or slab); slab-SQL and linear are
+        # measured by their own keys below
         out = reader.search_many(all_queries, via="slab")
         return out.groupBy("query").count().count()
 

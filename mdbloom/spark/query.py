@@ -15,9 +15,10 @@ Query plan:
      scanned — the distributed analogue of the Bloofi tree descent;
   3. **scan**: a single query is ONE SQL conjunction over the stored
      filter words of the surviving shards' storage rows
-     (`Linear.java:134-140`); a batch ANDs the k query-bit rows of each
-     surviving slab chunk (`FlatBloofi.java:188-205` word-parallel AND)
-     and joins the hit keys back to storage.
+     (`Linear.java:134-140`); a batch runs the same test per query in
+     one storage pass, or — past a planned-cost bound — ANDs the k
+     query-bit rows of each surviving slab chunk (`FlatBloofi.java:
+     188-205` word-parallel AND) and joins the hit keys back to storage.
 
 Every join key carries ``shard`` so the joins stay co-partitioned with the
 Parquet partition layout.
@@ -135,23 +136,23 @@ class BloomIndexReader:
       filter words of the surviving shards — no slab artifact, no
       storage join, no Python worker. ``via="slab"``/``"slab_sql"``
       force the all-JVM slab kernel (:meth:`search_slab_sql`) instead;
-    * a **batch** runs :meth:`search_slab_sql_many` (the default past
-      the linear regime, VERDICT r4 item 3: the O(k·N/64) bit-sliced
-      kernel as SQL higher-order functions, the slab form with the
-      ≥0.8 N→4N scaling pairs), :meth:`search_linear_many` (tiny
-      populations), or the NumPy kernel-of-record
-      :meth:`search_keys_many` when ``via="slab"`` asks for it.
+    * a **batch** is planned once and routed by its planned cost: the
+      join-free linear ``forall`` scan (:meth:`search_linear_many`)
+      while the row-queries that survive pruning stay within
+      :data:`LINEAR_MAX_ROW_QUERIES`, the NumPy slab kernel
+      (:meth:`search_keys_many` + storage join) past it or in the
+      distributed-planner regime. ``via="slab_sql"`` forces the
+      all-JVM slab kernel (:meth:`search_slab_sql_many`).
 
     ``via="auto"`` applies :meth:`choose_strategy`, which has two
-    outcomes: ``linear`` for a single query or a tiny population,
-    ``slab_sql`` for a batch past it."""
+    outcomes: ``linear`` or ``slab``."""
 
-    # batched auto strategy selection (VERDICT r3 item 7): below this
-    # many live physical slots the O(rows·k) linear storage scan beats
-    # reading the slab artifacts at all — measured regime from BENCH.md
-    # (the slab paths win batches from ~10^5-10^6 filters up; linear's
-    # advantage is the skipped artifact read + cheapest possible plan)
-    LINEAR_MAX_SLOTS = 100_000
+    # batched auto routing: a batch whose surviving row-queries (the
+    # sum, over its queries, of the manifest n_turns of the shards each
+    # keeps) stay within this runs the linear scan; past it, the NumPy
+    # slab kernel. Measured on low-hit batches (BENCH.md "Cost-routed
+    # batch search"): linear won at 16M row-queries, slab from 28M up
+    LINEAR_MAX_ROW_QUERIES = 1 << 24
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -751,6 +752,41 @@ class BloomIndexReader:
             out.append((name, qbits, sh or None))  # None: definite miss
         return out
 
+    def _split_plan(self, plan):
+        """One batch plan (:meth:`_plan_query_batch`) split the way every
+        batched strategy consumes it: ``(match_all, scans, shards)`` —
+        the match-all query names; ``(name, qbits, sh)`` for each query
+        that kept some shard, ``sh`` a shard list or ``[]`` for "no
+        restriction" (the query kept every shard); and the sorted union
+        of the restricted lists to scan, or ``None`` when some scan is
+        unrestricted. Definite misses drop out."""
+        match_all, scans, union, unrestricted = [], [], set(), False
+        for name, qbits, shards in plan:
+            if qbits.size == 0:
+                match_all.append(name)
+            elif shards is self.ALL_SHARDS:
+                scans.append((name, qbits, []))
+                unrestricted = True
+            elif shards is not None:
+                scans.append((name, qbits, list(shards)))
+                union.update(shards)
+        return match_all, scans, None if unrestricted else sorted(union)
+
+    def _surviving_rows(self, plan) -> int | None:
+        """Row-queries the linear scan of ``plan`` tests: per query, the
+        manifest ``n_turns`` of the shards it keeps (every live turn for
+        ALL_SHARDS and match-all). ``None`` past
+        :data:`DRIVER_PRUNE_MAX_SHARDS`, where the manifest is not
+        driver-resident and :meth:`choose_strategy` needs no sum."""
+        if self._manifest_row_count() > self.DRIVER_PRUNE_MAX_SHARDS:
+            return None
+        man = self.manifest()
+        turns = dict(zip(man["shard"].tolist(), man["n_turns"].tolist()))
+        every = sum(turns.values())
+        return sum(every if qbits.size == 0 or sh is self.ALL_SHARDS
+                   else sum(turns[s] for s in sh or ())
+                   for _, qbits, sh in plan)
+
     def _match_all_keys(self, names: list) -> DataFrame:
         """(query, shard, slot, key): every slot for each match-all (empty)
         query name — the batched key strategies' shared answer to an empty
@@ -769,7 +805,13 @@ class BloomIndexReader:
         share one Spark job (one slab read, one slotmap join) instead of Q
         job chains — per-query latency amortizes to ~zero. Per-query shard
         pruning still applies inside the scan via a broadcast plan."""
-        match_all: list[str] = []
+        return self._slab_keys(self._plan_query_batch(queries))
+
+    def _slab_keys(self, plan) -> DataFrame:
+        """:meth:`search_keys_many` over a precomputed batch plan."""
+        match_all, scans, shards = self._split_plan(plan)
+        if not scans:
+            return self._match_all_keys(match_all)
         # per-shard batched plan: the queries that survived pruning for
         # shard s, as ONE concatenated bit array + reduceat offsets, so
         # the executor evaluates all of them with a single vectorized
@@ -780,19 +822,11 @@ class BloomIndexReader:
         # O(pruned pairs + global queries), never the Q×S cross product
         # (VERDICT r4 item 4 — same compression the slab-SQL strategy's
         # empty-``sh`` plan structs use).
-        global_entries: list[tuple] = []
+        global_entries = [(n, qb.tolist()) for n, qb, sh in scans if not sh]
         shard_entries: dict[int, list] = {}
-        for name, qbits, shards in self._plan_query_batch(queries):
-            qb = qbits.tolist()
-            if not qb:
-                match_all.append(name)  # empty query matches everything
-            elif shards is self.ALL_SHARDS:
-                global_entries.append((name, qb))
-            elif shards is not None:  # None: definite miss
-                for s in shards:
-                    shard_entries.setdefault(s, []).append((name, qb))
-        if not (global_entries or shard_entries):
-            return self._match_all_keys(match_all)
+        for name, qbits, sh in scans:
+            for s in sh:
+                shard_entries.setdefault(s, []).append((name, qbits.tolist()))
         m = self.shape.m
 
         def _pack(entries):
@@ -805,8 +839,8 @@ class BloomIndexReader:
         shard_plans = {s: _pack(e) for s, e in shard_entries.items()}
         global_plan = _pack(global_entries) if global_entries else None
         slabs = self.slabs()
-        if not global_entries:
-            slabs = slabs.where(F.col("shard").isin(sorted(shard_entries)))
+        if shards is not None:
+            slabs = slabs.where(F.col("shard").isin(shards))
 
         def scan(iterator):
             def _arr(p):
@@ -861,23 +895,27 @@ class BloomIndexReader:
     def search_many(self, queries: dict, via: str = "auto") -> DataFrame:
         """Batched search -> storage rows tagged by query name.
 
-        ``via="auto"`` (default) applies :meth:`choose_strategy` with the
-        batch width — for populations past the linear regime that is the
-        all-JVM **slab-SQL** strategy (VERDICT r4 item 3: the slab form
-        with the ≥0.8 scaling pairs). ``via="slab"`` forces the NumPy
-        kernel-of-record path; ``via="linear"``/``via="slab_sql"`` force
-        the others. All three return identical rows in one column order,
+        The batch is planned ONCE (:meth:`_plan_query_batch`) and the
+        chosen strategy runs on that plan. ``via="auto"`` (default)
+        applies :meth:`choose_strategy` to the planned row-queries:
+        the join-free linear scan while they stay within
+        :data:`LINEAR_MAX_ROW_QUERIES`, else the NumPy slab kernel.
+        ``via="linear"``/``"slab"``/``"slab_sql"`` force one strategy.
+        All three return identical rows in one column order,
         ``(query, *storage columns)`` (contract-tested).
 
-        shuffle_hash hint (slab paths): both join sides are millions of
-        narrow rows for broad query batches — a hash join skips the two
-        full sorts an SMJ would pay (AQE still downgrades to broadcast
-        when the key side is tiny)."""
-        via = self._resolve_via(via, len(queries))
+        The slab paths' storage join builds its hash table on the
+        storage side, whose rows are bounded by the kept shards; the hit
+        keys grow with Q × hits (12M rows at 256 broad queries × 10⁶
+        turns, where a build on them ran out of memory on a 2g heap)."""
+        plan = self._plan_query_batch(queries)
+        if via == "auto":
+            via = self.choose_strategy(len(plan), self._surviving_rows(plan))
+        via = self._resolve_via(via)
         if via == "linear":
-            return self.search_linear_many(queries)
-        keys = (self.search_keys_slab_sql_many(queries) if via == "slab_sql"
-                else self.search_keys_many(queries))
+            return self._linear_many(plan)
+        keys = (self._slab_sql_keys(plan) if via == "slab_sql"
+                else self._slab_keys(plan))
         keys = (keys.select("query", "shard", "key")
                 # a filter stored under several ids can occupy several
                 # slots (the slab pass dedups keys only within a task's
@@ -889,8 +927,7 @@ class BloomIndexReader:
                 .dropDuplicates(["query", "shard", "key"]))
         storage = self.storage()
         # (query, *storage) — the same column order as the linear form
-        return (storage.join(keys.hint("shuffle_hash"), ["shard", "key"],
-                             "inner")
+        return (storage.hint("shuffle_hash").join(keys, ["shard", "key"])
                 .select("query", *storage.columns))
 
     def _word_pairs(self, qbits) -> list[tuple[int, int]]:
@@ -982,24 +1019,14 @@ class BloomIndexReader:
         so the common case adds ~nothing to the literal. Empty queries
         match everything (`ContainerImpl.java:159-169`): an empty pair
         list makes ``forall`` vacuously true."""
-        plans: list[tuple[str, list[tuple[int, int]], list[int]]] = []
-        all_shards: set[int] = set()
-        any_unrestricted = False
-        for name, qbits, shards in self._plan_query_batch(queries):
-            if qbits.size == 0:
-                plans.append((name, [], []))  # matches every row
-                any_unrestricted = True
-                continue
-            if shards is None:
-                continue  # pruned to zero shards: definite miss
-            # [] = kept every shard = no per-query restriction needed
-            if shards is self.ALL_SHARDS:
-                sh: list[int] = []
-                any_unrestricted = True
-            else:
-                sh = list(shards)
-                all_shards.update(shards)
-            plans.append((name, self._word_pairs(qbits), sh))
+        return self._linear_many(self._plan_query_batch(queries))
+
+    def _linear_many(self, plan) -> DataFrame:
+        """:meth:`search_linear_many` over a precomputed batch plan."""
+        match_all, scans, shards = self._split_plan(plan)
+        plans = ([(name, [], []) for name in match_all]
+                 + [(name, self._word_pairs(qbits), sh)
+                    for name, qbits, sh in scans])
         df = self.storage(keep_filter=True)
         out_cols = [c for c in df.columns if c != "filter"]
         if not plans:
@@ -1008,8 +1035,8 @@ class BloomIndexReader:
             return (df.where(F.lit(False))
                     .withColumn("query", F.lit(""))
                     .select("query", *out_cols))
-        if not any_unrestricted:
-            df = df.where(F.col("shard").isin(sorted(all_shards)))
+        if shards is not None and not match_all:
+            df = df.where(F.col("shard").isin(shards))
         n_preds = sum(len(p) for _, p, _ in plans)
         if n_preds > SQL_LITERAL_MAX_PREDS:
             # plans-as-data broadcast join: O(1) plan size at any Q
@@ -1114,29 +1141,18 @@ class BloomIndexReader:
         ONE SQL-text literal parsed JVM-side (py4j-free), falling back to
         a plans-as-data broadcast join above ``SQL_LITERAL_MAX_PREDS``
         total query bits."""
+        return self._slab_sql_keys(self._plan_query_batch(queries))
+
+    def _slab_sql_keys(self, plan) -> DataFrame:
+        """:meth:`search_keys_slab_sql_many` over a precomputed plan."""
         m = self.shape.m
-        plans: list[tuple[str, list[int], list[int]]] = []
-        match_all: list[str] = []
-        all_shards: set[int] = set()
-        any_unrestricted = False
-        for name, qbits, shards in self._plan_query_batch(queries):
-            if qbits.size == 0:
-                match_all.append(name)
-                continue
-            if shards is None:
-                continue  # pruned to zero shards: definite miss
-            if shards is self.ALL_SHARDS:
-                sh: list[int] = []  # empty sh = no shard restriction
-                any_unrestricted = True
-            else:
-                sh = list(shards)
-                all_shards.update(shards)
-            plans.append((name, [int(b) for b in qbits], sh))
-        if not plans:
+        match_all, scans, shards = self._split_plan(plan)
+        if not scans:
             return self._match_all_keys(match_all)
+        plans = [(name, qbits.tolist(), sh) for name, qbits, sh in scans]
         slabs = self.slabs()
-        if not any_unrestricted:
-            slabs = slabs.where(F.col("shard").isin(sorted(all_shards)))
+        if shards is not None:
+            slabs = slabs.where(F.col("shard").isin(shards))
         # per-row words-per-bit-row, hoisted for _slab_hits_sql;
         # CAST to int: `div` yields BIGINT, which would poison
         # sequence() elements and element_at() indices
@@ -1178,40 +1194,43 @@ class BloomIndexReader:
         keys = self.search_keys(tokens).select("shard", "key")
         return self.storage().join(keys, ["shard", "key"], "left_semi")
 
-    def choose_strategy(self, n_queries: int = 1) -> str:
+    def choose_strategy(self, n_queries: int = 1,
+                        rows: int | None = None) -> str:
         """Mechanical strategy selection for ``via="auto"`` — the
-        measured regimes as code, so a user gets the right physical plan
-        without reading the bench notes (both outcomes return
-        bit-identical rows, so this is purely a cost decision):
+        measured regimes as code (both outcomes return bit-identical
+        rows, so this is purely a cost decision). ``rows`` is the
+        batch's surviving row-queries (:meth:`_surviving_rows`); None
+        assumes every query keeps every shard.
 
-        ======================  ============  =============================
-        condition               choice        why (measured regime)
-        ======================  ============  =============================
-        one query, or live      ``linear``    one codegen storage scan: no
-        slots ≤ 10⁵                           slab read, no storage join,
-                                              no Python worker — the
-                                              lowest per-query constant
-                                              (perfbench ``lookup``), and
-                                              the cheapest plan at tiny
-                                              populations
-        else (a batch)          ``slab_sql``  the batched DEFAULT (VERDICT
-                                              r4 item 3): O(k·N/64)
-                                              bit-sliced kernel, all-JVM,
-                                              zero Arrow transfer — the
-                                              slab form with the ≥0.8
-                                              N→4N scaling pairs
-                                              (0.86-0.90); its per-batch
-                                              plan constant amortizes
-                                              across the batch
-        ======================  ============  =============================
+        ========================  ==========  ===========================
+        condition                 choice      why (measured regime)
+        ========================  ==========  ===========================
+        one query, or rows ≤      ``linear``  one join-free storage scan:
+        LINEAR_MAX_ROW_QUERIES                no slab read, no storage
+                                              join — faster than both
+                                              slab forms at every width
+                                              measured up to the bound
+                                              (BENCH.md "Cost-routed
+                                              batch search")
+        rows past the bound, or   ``slab``    the NumPy O(k·N/64) slab
+        past DRIVER_PRUNE_MAX_                kernel + storage join: its
+        SHARDS manifest rows                  per-row-query cost is the
+                                              smaller one; in the
+                                              distributed regime the
+                                              manifest is not summed
+        ========================  ==========  ===========================
         """
-        if n_queries <= 1 or self.slot_count() <= self.LINEAR_MAX_SLOTS:
+        if n_queries <= 1:
             return "linear"
-        return "slab_sql"
+        if self._manifest_row_count() > self.DRIVER_PRUNE_MAX_SHARDS:
+            return "slab"
+        if rows is None:
+            rows = n_queries * int(self.manifest()["n_turns"].sum())
+        return "linear" if rows <= self.LINEAR_MAX_ROW_QUERIES else "slab"
 
-    def _resolve_via(self, via: str, n_queries: int = 1) -> str:
+    def _resolve_via(self, via: str) -> str:
         if via == "auto":
-            return self.choose_strategy(n_queries)
+            return self.choose_strategy()
         if via not in ("slab", "linear", "slab_sql"):
             raise ValueError(
                 f"unknown strategy {via!r}: expected 'slab', 'linear', "
@@ -1256,11 +1275,12 @@ class BloomIndexReader:
         return out
 
     def search_verified_many(self, queries: dict, source_df: DataFrame,
-                             via: str = "slab") -> DataFrame:
+                             via: str = "auto") -> DataFrame:
         """Batched verified search: ``{name: [tokens...]}`` -> source rows
         tagged by query, Bloom false positives removed — the Q-at-once
         form of :meth:`search_verified` (one index scan, one source join,
-        one verification pass for the whole batch).
+        one verification pass for the whole batch). ``via`` is passed to
+        :meth:`search_many`, so both batch surfaces run one routed plan.
 
         Verification is data-driven and all-JVM: a broadcast (query ->
         spec) table joins onto the candidate rows, and one JVM-side
@@ -1271,7 +1291,6 @@ class BloomIndexReader:
         :meth:`search_many`."""
         cfg = self.cfg
         id_cols = list(cfg.id_columns)
-        via = self._resolve_via(via, len(queries))
         hits = self.search_many(queries, via=via)
         hits = hits.select("query", *id_cols).dropDuplicates(
             ["query", *id_cols])
@@ -1325,19 +1344,17 @@ class BloomIndexReader:
     def get(self, tokens) -> DataFrame:
         """Exact (bit-for-bit) match: content-addressed key equality
         (`ContainerImpl.java:111-122` via I6 'natural' index semantics)."""
-        if self._jvm_hasher is not None:
-            key = self._jvm_hasher.content_key(list(tokens), self.shape)
-            qbits = self._jvm_hasher.positions(list(tokens), self.shape)
-        else:
-            filt = self._cache.filter_for(list(tokens))
-            key = B.content_key(filt)
-            qbits = np.flatnonzero(
-                B.unpack(filt, self.shape.m)).astype(np.int64)
-        shards = self._prune_single(qbits, tokens)
+        shards = self._prune_single(self.query_bits(tokens), tokens)
         if shards is not self.ALL_SHARDS and not shards:
             return self.storage().where(F.lit(False))
         return self._where_shards(self.storage(), shards).where(
-            F.col("key") == key)
+            F.col("key") == self._content_key(tokens))
+
+    def _content_key(self, tokens) -> str:
+        """The content key the build stores for this token set."""
+        if self._jvm_hasher is not None:
+            return self._jvm_hasher.content_key(list(tokens), self.shape)
+        return B.content_key(self._cache.filter_for(list(tokens)))
 
     def get_bitexact(self, tokens, via: str = "linear") -> DataFrame:
         """PHYSICAL exact-get variants — equality decided on the stored
@@ -1384,47 +1401,18 @@ class BloomIndexReader:
         the storage table's key bloom filter + min/max stats); a tiny
         broadcast (query, key) map then tags the surviving rows — a key
         requested by several names returns a row per name."""
-        plans: list[tuple[str, str]] = []  # (name, content key)
-        all_shards: set[int] = set()
-        any_unrestricted = False
-        if self._jvm_hasher is not None:
-            self._jvm_hasher._ensure(
-                {t for toks in queries.values() for t in toks})
-        # huge-manifest regime: ONE distributed planning pass for the
-        # whole batch (per-query _prune_single would launch Q jobs)
-        batch_pruned = None
-        if self._manifest_row_count() > self.DRIVER_PRUNE_MAX_SHARDS:
-            batch_pruned = self.prune_shards_many_distributed(queries)
-        for name, toks in queries.items():
-            if self._jvm_hasher is not None:
-                key = self._jvm_hasher.content_key(list(toks), self.shape)
-                qbits = self._jvm_hasher.positions(list(toks), self.shape)
-            else:
-                filt = self._cache.filter_for(list(toks))
-                key = B.content_key(filt)
-                qbits = np.flatnonzero(
-                    B.unpack(filt, self.shape.m)).astype(np.int64)
-            if batch_pruned is not None:
-                shards = (self.ALL_SHARDS if qbits.size == 0
-                          else batch_pruned[name])
-            else:
-                shards = self.prune_shards(qbits, toks)
-            if shards is self.ALL_SHARDS:
-                any_unrestricted = True
-            elif not shards:
-                continue  # gate short-circuit (`ContainerImpl.java:115`)
-            else:
-                all_shards.update(shards)
-            plans.append((name, key))
+        match_all, scans, shards = self._split_plan(
+            self._plan_query_batch(queries))
+        plans = [(name, self._content_key(queries[name]))
+                 for name in match_all + [name for name, _, _ in scans]]
         storage = self.storage()
         if not plans:
             return (storage.where(F.lit(False))
                     .withColumn("query", F.lit(""))
                     .select("query", *storage.columns))
-        keys = sorted({k for _, k in plans})
-        hit = storage.where(F.col("key").isin(keys))
-        if not any_unrestricted:
-            hit = hit.where(F.col("shard").isin(sorted(all_shards)))
+        hit = storage.where(F.col("key").isin(sorted({k for _, k in plans})))
+        if shards is not None and not match_all:
+            hit = hit.where(F.col("shard").isin(shards))
         tag = self.spark.createDataFrame(plans, schema="query string, "
                                                        "key string")
         return (hit.join(F.broadcast(tag), "key", "inner")

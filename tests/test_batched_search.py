@@ -1,6 +1,7 @@
 """Batched multi-query search must return exactly the union of per-query
 searches, tagged by query name."""
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -368,26 +369,161 @@ def test_prune_shards_many_distributed_matches_driver(spark, reader):
 
 
 def test_choose_strategy_regimes(spark, reader, monkeypatch):
-    """via="auto" has two outcomes: a single query or a tiny population
-    -> the linear storage predicate; a batch past the tiny regime -> the
-    all-JVM slab-SQL path (VERDICT r4 item 3: the slab form with the
-    >=0.8 N->4N scaling pairs). Explicit via always wins; junk is
-    rejected."""
-    assert reader.slot_count() <= reader.LINEAR_MAX_SLOTS
+    """via="auto" routes a batch by the row-queries that survive pruning
+    (the manifest n_turns of every shard each query keeps): within
+    LINEAR_MAX_ROW_QUERIES the join-free linear scan, past it — or in
+    the distributed-planner regime — the NumPy slab kernel. A single
+    query is always linear; search_many plans the batch once; explicit
+    via always wins; junk is rejected."""
+    bound = reader.LINEAR_MAX_ROW_QUERIES
     assert reader.choose_strategy() == "linear"
     assert reader._resolve_via("auto") == "linear"
-    assert reader.choose_strategy(n_queries=64) == "linear"
-    monkeypatch.setattr(reader, "slot_count", lambda: 10_000_000)
+    # a bare int still answers: every query assumed to keep every shard
+    assert reader.choose_strategy(4) == "linear"
+    assert reader.choose_strategy(4, rows=bound + 1) == "slab"
+
+    # a word stored in exactly one shard: a selective query
+    stored = reader.storage().toPandas().merge(
+        synthesize_transcripts(spark, 1500, seed=42).toPandas(),
+        on=["conv_id", "turn_idx"])
+    shards_of: dict = {}
+    for shard, text in stored[["shard", "text"]].itertuples(index=False):
+        for w in text.split():
+            shards_of.setdefault(w, set()).add(shard)
+    rare = min(w for w, sh in shards_of.items() if len(sh) == 1)
+    selective = {"rare": [f"tok={rare}"], "absent": ["tok=zzznope"]}
+    broad = {"every": [], "a": reader.transcript_query_tokens(
+        "assistant", None, ["w00001"])}
+
+    calls = []
+    for fn in ("_plan_query_batch", "_linear_many", "_slab_keys"):
+        orig = getattr(reader, fn)
+        monkeypatch.setattr(reader, fn, lambda *a, _f=fn, _o=orig:
+                            calls.append(_f) or _o(*a))
+
+    def routed(queries):
+        calls.clear()
+        reader.search_many(queries)
+        assert calls[0] == "_plan_query_batch" and len(calls) == 2, calls
+        return {"_linear_many": "linear", "_slab_keys": "slab"}[calls[1]]
+
+    assert routed(broad) == "linear"
+    # a huge population: each shard holds half the bound
+    man = reader.manifest().copy()
+    man["n_turns"] = bound // 2
+    monkeypatch.setattr(reader, "_manifest", man)
+    plan = reader._plan_query_batch(selective)
+    assert 0 < reader._surviving_rows(plan) <= bound
+    assert routed(selective) == "linear"
+    assert reader._surviving_rows(reader._plan_query_batch(broad)) > bound
+    assert routed(broad) == "slab"
+    assert reader.choose_strategy(2) == "slab"
     # a single query stays linear at any population
-    assert reader.choose_strategy() == "linear"
-    assert reader._resolve_via("auto") == "linear"
-    # batched default is slab-SQL (VERDICT r4 item 3)
-    assert reader.choose_strategy(n_queries=2) == "slab_sql"
-    assert reader._resolve_via("auto", 256) == "slab_sql"
+    assert reader.choose_strategy(1, rows=10 * bound) == "linear"
+    # distributed-planner regime: no manifest sum, the slab outcome
+    monkeypatch.setattr(reader, "DRIVER_PRUNE_MAX_SHARDS", 0)
+    assert reader._surviving_rows(plan) is None
+    assert reader.choose_strategy(2, rows=0) == "slab"
+    assert routed(selective) == "slab"
     # explicit choice bypasses the selector entirely
     assert reader._resolve_via("linear") == "linear"
     with pytest.raises(ValueError):
         reader._resolve_via("bogus")
+
+
+def test_linear_predicates_reject_a_one_word_miss(spark, reader,
+                                                  monkeypatch):
+    """A query that differs from a stored filter in exactly ONE word —
+    its last nonzero word, or its first — must not match that filter.
+    Checked on search and on both forms of search_many(via="linear")
+    (SQL literal, broadcast join) against the kernel.linear_search
+    oracle over the stored filters of the shards the query keeps. The
+    query filter is the stored row's own filter plus one bit of its
+    shard's summary, so pruning keeps the row's shard."""
+    from mdbloom import bits as B
+    from mdbloom import kernel as K
+    from mdbloom.spark import query as Q
+    stored = reader.storage(keep_filter=True).toPandas().merge(
+        synthesize_transcripts(spark, 1500, seed=42).toPandas(),
+        on=["conv_id", "turn_idx"])
+    words = np.stack(stored["filter"].to_numpy()).astype(np.int64) \
+        .view(np.uint64)
+    shard_col = stored["shard"].to_numpy()
+    ids = list(zip(stored["conv_id"], stored["turn_idx"]))
+
+    def tokens(i):
+        row = stored.iloc[i]
+        tool = row["tool"] if row["tool"] not in (None, "none") else None
+        return reader.transcript_query_tokens(row["role"], tool,
+                                              row["text"].split())
+
+    def one_word_miss(i, kind):
+        """Row i's filter plus one spare shard-summary bit, placed in the
+        query's last (or first) nonzero word; None if no bit fits."""
+        own = words[i]
+        spare = np.bitwise_or.reduce(words[shard_col == shard_col[i]]) & ~own
+        nz = np.flatnonzero(own)
+        span = (range(nz[-1], len(own)) if kind == "last"
+                else range(nz[0], -1, -1))
+        w = next((w for w in span if spare[w]), None)
+        if w is None:
+            return None
+        bit = 64 * w + int(np.flatnonzero(B.unpack(spare[w:w + 1], 64))[0])
+        qbits = np.union1d(np.flatnonzero(B.unpack(own, reader.shape.m)),
+                           [bit]).astype(np.int64)
+        query = B.from_bits(qbits, reader.shape.m)
+        assert np.flatnonzero(query & ~own).tolist() == [w]
+        assert w == np.flatnonzero(query)[-1 if kind == "last" else 0]
+        return qbits
+
+    crafted = {}  # token tuple -> crafted query bits
+    cases = []    # (name, tokens, row id)
+    for shard in sorted(set(shard_col)):
+        for i in np.flatnonzero(shard_col == shard):
+            found = {k: one_word_miss(i, k) for k in ("last", "first")}
+            if any(q is None for q in found.values()):
+                continue
+            toks = tokens(i)
+            assert np.array_equal(B.from_bits(
+                reader.query_bits(toks), reader.shape.m), words[i])
+            # distinct token orders key the two crafted queries apart
+            for kind, toks_k in (("last", toks), ("first", toks[::-1])):
+                crafted[tuple(toks_k)] = found[kind]
+                cases.append((f"{kind}{i}", toks_k, ids[i]))
+            break
+    assert len(cases) == 2 * len(set(shard_col))
+
+    orig = reader.query_bits
+    monkeypatch.setattr(reader, "query_bits", lambda toks: crafted[
+        tuple(toks)] if tuple(toks) in crafted else orig(toks))
+
+    def oracle(toks):
+        qbits = crafted[tuple(toks)]
+        kept = np.isin(shard_col, reader.prune_shards(qbits, toks))
+        hit = K.linear_search(words[kept], B.from_bits(qbits,
+                                                       reader.shape.m))
+        return {ids[j] for j in np.flatnonzero(kept)[hit]}
+
+    want = {}
+    for name, toks, row_id in cases:
+        want[name] = oracle(toks)
+        assert row_id not in want[name], name
+        got = set(map(tuple, reader.search(toks)
+                      .select("conv_id", "turn_idx").toPandas()
+                      .itertuples(index=False)))
+        assert got == want[name], name
+    queries = {name: toks for name, toks, _ in cases}
+
+    def batched():
+        out = reader.search_many(queries, via="linear").toPandas()
+        return {name: set(map(tuple, out[out["query"] == name]
+                              [["conv_id", "turn_idx"]]
+                              .itertuples(index=False)))
+                for name in queries}
+
+    assert batched() == want
+    monkeypatch.setattr(Q, "SQL_LITERAL_MAX_PREDS", 0)
+    assert batched() == want
 
 
 def test_search_verified_auto_matches_explicit(spark, reader):
