@@ -13,7 +13,7 @@ Query plan:
      `ContainerImpl.java:171`): the manifest (one small row per shard) is
      collected once; shards whose OR-summary lacks any query bit are never
      scanned — the distributed analogue of the Bloofi tree descent;
-  3. **scan**: a single query is ONE SQL conjunction over the stored
+  3. **scan**: a single query is ONE SQL ``forall`` over the stored
      filter words of the surviving shards' storage rows
      (`Linear.java:134-140`); a batch runs the same test per query in
      one storage pass, or — past a planned-cost bound — ANDs the k
@@ -80,23 +80,23 @@ def _sql_int_array(xs) -> str:
             else "array(%s)" % ",".join(str(x) for x in xs))
 
 
+def _pairs_sql(pairs: list[tuple[int, int]]) -> str:
+    """(word_idx, word_mask) pairs as the array<struct<i:int,v:bigint>>
+    literal of every linear predicate; empty needs the cast."""
+    if not pairs:
+        return "CAST(array() AS array<struct<i:int,v:bigint>>)"
+    return "array(%s)" % ",".join("named_struct('i',%d,'v',%s)" % (
+        i, _sql_bigint(v)) for i, v in pairs)
+
+
 def _plan_struct_sql(name: str, pairs: list[tuple[int, int]],
                      shards: list[int] | None = None) -> str:
     """One query plan as SQL text: named_struct('q', <name>, 'ps',
-    [(word_idx, word_mask)...], 'sh', [shard...]). An empty pair list
-    (match-all query) needs an explicit cast — ``array()`` alone types
-    as array<null>. An empty/None shard list means "no restriction"
-    (the query kept every shard), keeping the literal tiny in the
-    common all-shards-survive case."""
-    q = _escaped_name(name)
-    sh = _sql_int_array(shards or [])
-    if not pairs:
-        return ("named_struct('q','%s','ps',"
-                "CAST(array() AS array<struct<i:int,v:bigint>>),"
-                "'sh',%s)" % (q, sh))
-    ps = ",".join("named_struct('i',%d,'v',%s)" % (i, _sql_bigint(v))
-                  for i, v in pairs)
-    return "named_struct('q','%s','ps',array(%s),'sh',%s)" % (q, ps, sh)
+    :func:`_pairs_sql`, 'sh', [shard...]). An empty/None shard list
+    means "no restriction" (the query kept every shard), keeping the
+    literal tiny in the common all-shards-survive case."""
+    return "named_struct('q','%s','ps',%s,'sh',%s)" % (
+        _escaped_name(name), _pairs_sql(pairs), _sql_int_array(shards or []))
 
 
 def _plan_struct_sql_bits(name: str, bits: list[int],
@@ -132,8 +132,8 @@ class BloomIndexReader:
 
     * a **single query** (:meth:`search`, :meth:`search_rows`,
       :meth:`search_verified`) runs the all-JVM linear storage
-      predicate: one whole-stage-codegen conjunction over the stored
-      filter words of the surviving shards — no slab artifact, no
+      predicate: one ``forall`` over a query-invariant pair literal
+      against the surviving shards' filter words — no slab artifact, no
       storage join, no Python worker. ``via="slab"``/``"slab_sql"``
       force the all-JVM slab kernel (:meth:`search_slab_sql`) instead;
     * a **batch** is planned once and routed by its planned cost: the
@@ -700,16 +700,21 @@ class BloomIndexReader:
             return self.prune_shards(qbits, tokens)
         if qbits.size == 0:
             return self.ALL_SHARDS  # empty query matches everything
-        got = self.prune_shards_many_distributed({"q": list(tokens)})["q"]
-        return got
+        return self.prune_shards_many_distributed({"q": list(tokens)})["q"]
 
-    def _where_shards(self, df: DataFrame, shards) -> DataFrame:
-        """Apply a shard restriction unless it is the no-restriction
-        sentinel (the unpruned scan IS the intended plan then)."""
-        if shards is self.ALL_SHARDS:
-            return df
-        return df.where(F.col("shard").isin(
-            [int(s) for s in shards]))
+    def _single_where(self, qbits, tokens, keep_filter: bool,
+                      pred: str) -> DataFrame:
+        """Storage rows of the shards ONE query keeps that satisfy
+        ``pred``, as ONE ``where`` string (one py4j call); the shard
+        list leads as ``shard IN (...)``, a partition filter, unless
+        the query kept every shard. ``keep_filter`` reads the stored
+        filter words for ``pred`` and drops them after."""
+        shards = self._prune_single(qbits, tokens)
+        if shards is not self.ALL_SHARDS:
+            listed = ",".join(str(int(s)) for s in shards)
+            pred = f"shard IN ({listed}) AND {pred}" if shards else "false"
+        df = self.storage(keep_filter).where(pred)
+        return df.drop("filter") if keep_filter else df
 
     def _plan_query_batch(self, queries: dict):
         """Shared batched-query planning for EVERY batched strategy
@@ -786,6 +791,11 @@ class BloomIndexReader:
         return sum(every if qbits.size == 0 or sh is self.ALL_SHARDS
                    else sum(turns[s] for s in sh or ())
                    for _, qbits, sh in plan)
+
+    def _empty_batch(self) -> DataFrame:
+        """No rows, in the ``(query, *storage)`` columns and types of a
+        non-empty batch, so unions of batches never depend on content."""
+        return self.storage().where("false").selectExpr("'' AS query", "*")
 
     def _match_all_keys(self, names: list) -> DataFrame:
         """(query, shard, slot, key): every slot for each match-all (empty)
@@ -907,11 +917,14 @@ class BloomIndexReader:
         The slab paths' storage join builds its hash table on the
         storage side, whose rows are bounded by the kept shards; the hit
         keys grow with Q × hits (12M rows at 256 broad queries × 10⁶
-        turns, where a build on them ran out of memory on a 2g heap)."""
+        turns, where a build on them ran out of memory on a 2g heap).
+        An all-miss batch runs no strategy and no join."""
         plan = self._plan_query_batch(queries)
         if via == "auto":
             via = self.choose_strategy(len(plan), self._surviving_rows(plan))
         via = self._resolve_via(via)
+        if all(shards is None for _, _, shards in plan):
+            return self._empty_batch()
         if via == "linear":
             return self._linear_many(plan)
         keys = (self._slab_sql_keys(plan) if via == "slab_sql"
@@ -938,19 +951,6 @@ class BloomIndexReader:
         return [(int(w) + 1, int(qwords[w]))
                 for w in np.flatnonzero(qwords != 0)]
 
-    def _linear_where(self, qbits, tokens, preds: list[str]) -> DataFrame:
-        """Storage rows of the shards the query keeps whose stored filter
-        words satisfy every SQL predicate in ``preds`` — parsed JVM-side
-        as ONE ``F.expr`` conjunction (a py4j Column chain costs ~5 round
-        trips per query word), evaluated in whole-stage codegen."""
-        shards = self._prune_single(qbits, tokens)
-        if shards is not self.ALL_SHARDS and not shards:
-            return self.storage().where(F.lit(False))
-        df = self._where_shards(self.storage(keep_filter=True), shards)
-        if preds:
-            df = df.where(F.expr(" AND ".join(preds)))
-        return df.drop("filter")
-
     def search(self, tokens) -> DataFrame:
         """Containment search -> storage rows (shard, key, <ids>,
         <payload>): values whose filter has all query bits (may include
@@ -959,16 +959,22 @@ class BloomIndexReader:
         Distributed Linear (I1) scan — `Linear.java:134-140` re-expressed
         as one Spark SQL predicate over the stored filter words of the
         surviving shards: for every nonzero query word w,
-        ``(filter[w] & qword) == qword``. Zero Python, whole-stage
-        codegen, touches only the storage table: no slab artifact read
-        and no storage join, so a selective query costs one scan job.
+        ``(filter[w] & qword) == qword``, as ONE ``forall`` over the
+        (w, qword) pair literal the batched scan uses. Constant folding
+        makes that array one literal the generated code reaches by
+        reference, so the scan + project stage's code text is the same
+        for every query and compiles once per session; inlined masks
+        made every lookup pay a ~10 ms compile. The filter itself runs
+        interpreted (``forall`` has no codegen). Zero Python, touches
+        only the storage table: no slab read and no storage join.
         Empty query matches everything (`ContainerImpl.java:159-169`)."""
         qbits = self.query_bits(tokens)
         if qbits.size == 0:
             return self.storage()
-        return self._linear_where(qbits, tokens, [
-            f"(element_at(`filter`, {i}) & {_sql_bigint(v)}) = "
-            f"{_sql_bigint(v)}" for i, v in self._word_pairs(qbits)])
+        pairs = _pairs_sql(self._word_pairs(qbits))
+        return self._single_where(
+            qbits, tokens, True,
+            f"forall({pairs}, p -> (element_at(`filter`, p.i) & p.v) = p.v)")
 
     search_linear = search  # the linear plan's explicit name
 
@@ -1030,11 +1036,7 @@ class BloomIndexReader:
         df = self.storage(keep_filter=True)
         out_cols = [c for c in df.columns if c != "filter"]
         if not plans:
-            # same (query, *storage) column ORDER as the non-empty paths —
-            # callers unioning batches must not depend on data content
-            return (df.where(F.lit(False))
-                    .withColumn("query", F.lit(""))
-                    .select("query", *out_cols))
+            return self._empty_batch()
         if shards is not None and not match_all:
             df = df.where(F.col("shard").isin(shards))
         n_preds = sum(len(p) for _, p, _ in plans)
@@ -1131,8 +1133,8 @@ class BloomIndexReader:
         transfer of slab bytes to Python at all), so it inherits the
         JVM paths' measured 0.67-0.90 scaling. (Higher-order-function
         lambdas evaluate *interpreted* on the JVM — tight and scalable,
-        but NOT whole-stage codegen; only plain expression pipelines
-        like the linear scan's element_at conjunction get codegen'd.)
+        but NOT whole-stage codegen, like every linear ``forall``;
+        only plain expression pipelines such as scans get codegen'd.)
         Per-query driver-side
         gate pruning is identical to the other strategies: each plan
         carries its shard set and the scan is restricted to the union.
@@ -1344,11 +1346,8 @@ class BloomIndexReader:
     def get(self, tokens) -> DataFrame:
         """Exact (bit-for-bit) match: content-addressed key equality
         (`ContainerImpl.java:111-122` via I6 'natural' index semantics)."""
-        shards = self._prune_single(self.query_bits(tokens), tokens)
-        if shards is not self.ALL_SHARDS and not shards:
-            return self.storage().where(F.lit(False))
-        return self._where_shards(self.storage(), shards).where(
-            F.col("key") == self._content_key(tokens))
+        return self._single_where(self.query_bits(tokens), tokens, False,
+                                  f"key = '{self._content_key(tokens)}'")
 
     def _content_key(self, tokens) -> str:
         """The content key the build stores for this token set."""
@@ -1363,9 +1362,10 @@ class BloomIndexReader:
         content-addressed, the I6 semantics every reference test uses):
 
         * ``via="linear"``: word-compare scan (`Linear.java:116-122`
-          compares whole stored filters) — ONE codegen conjunction of
-          all W word equalities (zero words included) over the pruned
-          shards' storage rows.
+          compares whole stored filters) — ONE interpreted ``forall``
+          of all W word equalities (zero words included) over the
+          pruned shards' storage rows, in a codegen stage that, as in
+          :meth:`search`, compiles once per session.
         * ``via="slab"``: bit-sliced candidate narrowing
           (`FlatBloofi.java:114-150` walks all m bit-columns): the slab
           kernel ANDs the k set-bit rows into candidate slots, and the
@@ -1388,9 +1388,10 @@ class BloomIndexReader:
                 lambda a, w: a + F.bit_count(w))
             return cand.where(popcnt == int(qbits.size)).drop("filter")
         qwords = B.from_bits(qbits, self.shape.m).view(np.int64)
-        return self._linear_where(qbits, tokens, [
-            f"element_at(`filter`, {i + 1}) = {_sql_bigint(int(v))}"
-            for i, v in enumerate(qwords)])
+        pairs = _pairs_sql([(i + 1, int(v)) for i, v in enumerate(qwords)])
+        return self._single_where(
+            qbits, tokens, True,
+            f"forall({pairs}, p -> element_at(`filter`, p.i) = p.v)")
 
     def get_many(self, queries: dict) -> DataFrame:
         """Batched exact (bit-for-bit) get: ``{name: [tokens...]}`` ->
@@ -1405,11 +1406,9 @@ class BloomIndexReader:
             self._plan_query_batch(queries))
         plans = [(name, self._content_key(queries[name]))
                  for name in match_all + [name for name, _, _ in scans]]
-        storage = self.storage()
         if not plans:
-            return (storage.where(F.lit(False))
-                    .withColumn("query", F.lit(""))
-                    .select("query", *storage.columns))
+            return self._empty_batch()
+        storage = self.storage()
         hit = storage.where(F.col("key").isin(sorted({k for _, k in plans})))
         if shards is not None and not match_all:
             hit = hit.where(F.col("shard").isin(shards))

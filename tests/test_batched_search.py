@@ -526,6 +526,99 @@ def test_linear_predicates_reject_a_one_word_miss(spark, reader,
     assert batched() == want
 
 
+def test_single_query_linear_plans_compile_no_new_code(spark, reader,
+                                                       monkeypatch):
+    """After one warm query, distinct search and get_bitexact(via=
+    "linear") queries compile no new code (CodegenMetrics): each query's
+    (word, mask) pairs fold into one literal that the generated code
+    reaches by reference, so the code text is the same whatever the
+    word count or shard set. One query carries a word mask of bit 63
+    alone (INT64_MIN), checked against the kernel.linear_search oracle
+    over the stored filters of the shards it keeps."""
+    from mdbloom import bits as B
+    from mdbloom import kernel as K
+    stored = reader.storage(keep_filter=True).toPandas().merge(
+        synthesize_transcripts(spark, 1500, seed=42).toPandas(),
+        on=["conv_id", "turn_idx"])
+    words = np.stack(stored["filter"].to_numpy()).astype(np.int64) \
+        .view(np.uint64)
+    shard_col = stored["shard"].to_numpy()
+    ids = list(zip(stored["conv_id"], stored["turn_idx"]))
+
+    def tokens(i):
+        row = stored.iloc[i]
+        tool = row["tool"] if row["tool"] not in (None, "none") else None
+        return reader.transcript_query_tokens(row["role"], tool,
+                                              row["text"].split())
+
+    # row i's word w has bit 63 set: the query is that bit alone plus
+    # one bit of another of row i's words, so one mask is INT64_MIN
+    i, w = np.argwhere(words >> np.uint64(63))[0]
+    own = np.flatnonzero(B.unpack(words[i], reader.shape.m))
+    other = next(b for b in own if b // 64 != w)
+    qbits63 = np.array(sorted([64 * w + 63, other]), dtype=np.int64)
+    toks63 = tokens(i)
+    assert -(2 ** 63) in B.from_bits(qbits63, reader.shape.m) \
+        .view(np.int64).tolist()
+    orig = reader.query_bits
+    monkeypatch.setattr(reader, "query_bits", lambda toks: qbits63 if
+                        list(toks) == toks63 else orig(toks))
+
+    queries = [toks63] + [tokens(int(np.flatnonzero(shard_col == s)[j]))
+                          for s in sorted(set(shard_col)) for j in (0, 1)]
+    pairs = [len(reader._word_pairs(reader.query_bits(t))) for t in queries]
+    kept = [tuple(reader.prune_shards(reader.query_bits(t), t))
+            for t in queries]
+    assert len(set(pairs)) > 1 and len(set(kept)) > 1, (pairs, kept)
+
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = metrics.METRIC_COMPILATION_TIME().getCount
+    warm = tokens(int(np.flatnonzero(shard_col == shard_col[i])[-1]))
+    reader.search(warm).collect()
+    reader.get_bitexact(warm).collect()
+    before = compiles()
+    got = {}
+    for toks in queries:
+        got[tuple(toks)] = (
+            {(r.conv_id, r.turn_idx) for r in reader.search(toks).collect()},
+            {(r.conv_id, r.turn_idx)
+             for r in reader.get_bitexact(toks).collect()})
+    assert compiles() == before
+
+    in_kept = np.isin(shard_col, reader.prune_shards(qbits63, toks63))
+    query = B.from_bits(qbits63, reader.shape.m)
+    hit = K.linear_search(words[in_kept], query)
+    exact = (words[in_kept] == query).all(axis=1)
+    rows = np.flatnonzero(in_kept)
+    assert got[tuple(toks63)] == ({ids[j] for j in rows[hit]},
+                                  {ids[j] for j in rows[exact]})
+    assert ids[i] in got[tuple(toks63)][0]
+
+
+def test_search_many_all_miss_batch_is_empty_and_typed(spark, reader,
+                                                       monkeypatch):
+    """A batch whose every query prunes to a definite miss returns no
+    rows, with the column names and types of a non-empty batch, under
+    every ``via`` — and runs no strategy to get there; an unknown
+    ``via`` is still rejected."""
+    vias = ("auto", "linear", "slab", "slab_sql")
+    absent = {"a": ["tok=zzznope"], "b": ["role=user", "tok=qqqnope"]}
+    assert all(sh is None for _, _, sh in reader._plan_query_batch(absent))
+    present = {"p": reader.transcript_query_tokens("assistant", None,
+                                                   ["w00001"])}
+    want = {via: reader.search_many(present, via=via).dtypes
+            for via in vias}
+    for fn in ("_linear_many", "_slab_keys", "_slab_sql_keys"):
+        monkeypatch.setattr(reader, fn,
+                            lambda plan, _f=fn: pytest.fail(_f))
+    for via in vias:
+        out = reader.search_many(absent, via=via)
+        assert out.dtypes == want[via], via
+        assert out.count() == 0, via
+    with pytest.raises(ValueError):
+        reader.search_many(absent, via="bogus")
+
+
 def test_search_verified_auto_matches_explicit(spark, reader):
     """Auto-selected strategy returns the same rows as every explicit
     one (they are bit-identical by contract)."""

@@ -56,7 +56,12 @@ def test_linear_search_is_all_jvm_codegen(spark, reader):
     """Every single-query surface plans without a Python node: the
     linear predicate (search, search_rows/search_verified under auto),
     the all-JVM slab kernel (search_keys, get_bitexact via="slab"), and
-    the content-key get — including the empty query's slot listing."""
+    the content-key get — including the empty query's slot listing.
+    The linear predicate is one ``forall`` over a literal pair array:
+    the Filter runs it interpreted (``forall`` has no codegen), inside
+    a whole-stage-codegen stage with the scan and project, whose code
+    text reaches the folded literal by reference and so is the same
+    for every query (compiled once, not per lookup)."""
     toks = reader.transcript_query_tokens("assistant", None, ["w00002"])
     # a source table without Python nodes of its own
     src = spark.createDataFrame(synthesize_transcripts_pandas(800, seed=42))
